@@ -102,7 +102,7 @@ def check_one(sf_dir, out_dir, name, sql, mem_limit, temp_cap, q):
 
 def registered_oracles():
     """The LIVE registered oracle set, straight from SparkEntry (no
-    SparkSession — graft.OracleNames is a plain println main). Returns
+    SparkSession — `graft.Tools oracle-names` starts none). Returns
     None when the classes aren't built, with a loud warning: the sweep
     then runs UNPINNED, which is exactly the round-12 stale-ledger hole.
     """
@@ -110,7 +110,7 @@ def registered_oracles():
     cp = f"{repo}/target/scala-2.13/classes:/opt/spark/jars/*"
     try:
         out = subprocess.run(
-            ["java", "-cp", cp, "graft.OracleNames"],
+            ["java", "-cp", cp, "graft.Tools", "oracle-names"],
             capture_output=True, text=True, timeout=120, check=True)
         names = {l.strip() for l in out.stdout.splitlines() if l.strip()}
         return names or None

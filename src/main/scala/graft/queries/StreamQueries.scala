@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 import graft.core.Tables
 import graft.streaming.EventStreams
@@ -376,12 +377,11 @@ object StreamQueries {
     * q128 10.10 s while the same join SHAPE in batch, q55/q55b, runs
     * ~0.3 s). State volume tracks source bytes, so with two measured
     * constants — a 64 MB/partition ceiling target
-    * (`SPARK_GRAFT_STREAM_STATE_TARGET_BYTES`, the usual shuffle-partition
-    * sizing band) and a 256 KB/partition bring-up floor
-    * (`SPARK_GRAFT_STREAM_STATE_MIN_BYTES`: below that a partition's
-    * per-row put workload costs less than its store's bring-up, so more
-    * partitions only add overhead; constants sized by a 1/4/8/32-partition
-    * sweep at sf0.1, OPTIMIZATION_r19.md) —
+    * (`StateTargetBytes`, the usual shuffle-partition sizing band) and a
+    * 256 KB/partition bring-up floor (`StateMinBytes`: below that a
+    * partition's per-row put workload costs less than its store's
+    * bring-up, so more partitions only add overhead; constants sized by a
+    * 1/4/8/32-partition sweep at sf0.1, OPTIMIZATION_r19.md) —
     *   floor = min(cores, ceil(bytes / 256 KB))  // keep cores busy, never
     *                                             // sub-bring-up slices
     *   parts = clamp(ceil(bytes / 64 MB), max(1, floor), 8 × cores)
@@ -418,7 +418,7 @@ object StreamQueries {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.getContentSummary(p).getLength else -1L
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   /** Partition decision including the unknown-size branch: an unprobeable
     * source keeps FULL parallelism (cores), never 1 — an unprobeable
@@ -429,14 +429,13 @@ object StreamQueries {
     if (bytes < 0) math.max(1, cores)
     else adaptiveStateParts(bytes, cores, target, minBytes)
 
+  private val StateTargetBytes = 64L * 1024 * 1024
+  private val StateMinBytes = 256L * 1024
+
   private[graft] def withAdaptiveStateParts[T](spark: SparkSession, dir: String)(body: => T): T = {
     val bytes = sourceBytes(spark, s"$dir/events.parquet")
-    val target = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_TARGET_BYTES",
-      (64L * 1024 * 1024).toString).toLong
-    val minBytes = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_MIN_BYTES",
-      (256L * 1024).toString).toLong
     val parts = statePartsFor(bytes,
-      spark.sparkContext.defaultParallelism, target, minBytes)
+      spark.sparkContext.defaultParallelism, StateTargetBytes, StateMinBytes)
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, parts.toString)

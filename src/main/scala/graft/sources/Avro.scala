@@ -80,13 +80,7 @@ object Avro {
       }
       def dj(v: Any): String = v match {
         case null => "null"
-        case s: String =>
-          "\"" + s.flatMap {
-            case '"' => "\\\""
-            case '\\' => "\\\\"
-            case c if c < ' ' => f"\\u${c.toInt}%04x"
-            case c => c.toString
-          } + "\""
+        case s: String => new ObjectMapper().writeValueAsString(s)
         case b: Boolean => b.toString
         case n => n.toString // Long / Int / Double
       }

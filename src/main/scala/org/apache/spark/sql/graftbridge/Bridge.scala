@@ -37,7 +37,12 @@ object Bridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Drain the listener bus (private[spark]) — dev profiling tools must
-    * wait for async job/stage events before reading listener state. */
+    * wait for async job/stage events before reading listener state. A
+    * bus still busy after 10 s is reported and the caller goes on with
+    * what its listener has seen so far. */
   def waitListenerBusEmpty(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
+    try sc.listenerBus.waitUntilEmpty(10000L)
+    catch { case e: java.util.concurrent.TimeoutException =>
+      System.err.println(s"[bridge] listener bus not drained: ${e.getMessage}")
+    }
 }

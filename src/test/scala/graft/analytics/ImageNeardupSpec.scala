@@ -18,6 +18,9 @@ class ImageNeardupSpec extends SparkSuite {
     val plan = full.split("== Initial Plan ==").head
     assert(plan.contains("ReusedExchange"),
       s"expected the self-join's second side to reuse the band shuffle:\n$plan")
+    // equal-key band matching needs no sort: the hint must take effect
+    assert(plan.contains("ShuffledHashJoin"),
+      s"expected the band self-join to run as a shuffled hash join:\n$plan")
     assert(!plan.contains("InMemoryTableScan"),
       "q116 must not pin a session-lifetime cache")
     // the decode+dhash typed map must appear ONCE in the final plan —

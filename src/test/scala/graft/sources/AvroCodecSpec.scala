@@ -178,7 +178,8 @@ class AvroCodecSpec extends AnyFunSuite {
 
   test("schema JSON round-trips defaults through the strict parser") {
     val v2 = Schema("change", changelog.fields :+
-      Field("source", AString, Some(Default("upsert-stream"))))
+      Field("source", AString, Some(Default("upsert-stream"))) :+
+      Field("note", AString, Some(Default("q\"b\\n\nt\tc\u0001"))))
     assert(Schema.parse(v2.json) == v2)
     val numeric = Schema("n", Vector(
       Field("a", ALong, Some(Default(7L))), Field("b", ABoolean, Some(Default(true))),

@@ -136,8 +136,8 @@ class StreamingSpec extends SparkSuite {
     // late-event watermark lags the eviction watermark by a batch, the
     // row gets through, and only the max(lastTs + TTL, watermark + 1)
     // clamp in Sessionize keeps the query alive — reproduced and
-    // validated at sf1 by graft.StreamProbe (SCALING.md round 8), which
-    // crashed 2 of 3 runs before the clamp.
+    // validated at sf1 by the stream probe (now `graft.Tools stream`;
+    // SCALING.md round 8), which crashed 2 of 3 runs before the clamp.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
